@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** ONE definition of the bench-shaped local session, shared by
-  * [[Bench]] and the plan/timing tooling (PlanDump / PlanProbe /
-  * TimeProbe). ADVICE r16: the tooling previously duplicated these
-  * configs inline, so a change to the pinned bench session would have
-  * silently diverged the dumped plan shapes from the benched ones.
+  * [[Bench]], [[Verify]], [[PipelineSmoke]], the perfbench program
+  * and the plan/timing tooling (PlanDump / TimeProbe), so the session
+  * that is benchmarked is the one whose answers are checked and whose
+  * plans are dumped.
   */
 object BenchSession {
   /** Build the pinned session at `cpus` local slots (shuffle
@@ -30,6 +30,16 @@ object BenchSession {
       // floor keeps small hot shuffles at full parallelism and is
       // invisible at scale, where partitions are GB-sized.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      // Every streaming query runs on a cloned session. With artifact
+      // isolation on (the default) each clone gets its own artifact
+      // UUID, so executors build a fresh session classloader per query,
+      // and the codegen cache, keyed by (classloader, source), misses:
+      // every Incremental.runOnce tick would recompile all of its
+      // generated classes. The engine adds no session artifacts (no addArtifact,
+      // no Spark Connect), so isolation buys it nothing. The setting
+      // only takes effect when a session is created, so it lives here
+      // and not in a runtime conf.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import graft.domain.MatchTransform
 import graft.streaming.Incremental
@@ -18,13 +18,7 @@ import graft.streaming.Incremental
 object PipelineSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val tmp = Files.createTempDirectory("graft_pipeline_smoke").toString
@@ -59,9 +53,11 @@ object PipelineSmoke {
         else slice(2).unionByName(slice(0).limit(1000))
       arriving.write.mode("append").parquet(bronzeDir)
       val t0 = System.nanoTime()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       Incremental.runOnce(spark, bronzeDir, summoners, silverDir, goldDir, ckpt)
         .awaitTermination()
-      println(f"poll $i: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      println(f"poll $i: ${(System.nanoTime() - t0) / 1e9}%.1f s, $compiles codegen compiles")
     }
     Incremental.compactGold(spark, goldDir)
 

@@ -95,7 +95,8 @@ object GraphIngest {
     * then one [[applyAttach]] per micro-batch under an
     * [[MergeInto.epochFor]]-mapped epoch. Events need (vec_id, fcid,
     * embedding, timestamp) with WRITE-time stamps — see
-    * [[Incremental.runOnce]] for the late-data contract. */
+    * [[Incremental.runOnce]] for the late-data contract and the
+    * session setting a caller that starts one pass per tick needs. */
   def runOnce(spark: SparkSession, deltaDir: String, graphDir: String,
       checkpointDir: String, baseM: DataFrame, bHub: DataFrame,
       bSH: DataFrame): StreamingQuery = {

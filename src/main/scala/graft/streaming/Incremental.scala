@@ -73,7 +73,14 @@ object Incremental {
     * Do NOT stamp business/event time from inside the payload (it can
     * predate the watermark by years); a backfill writer must either
     * stamp backfill-run time or use a fresh checkpoint. The
-    * PipelineSmoke main demonstrates the failure mode. */
+    * PipelineSmoke main demonstrates the failure mode.
+    *
+    * A session that starts one such query per tick should be built with
+    * `spark.sql.artifact.isolation.enabled=false`, as
+    * [[graft.BenchSession]] does: under the default, each query's cloned
+    * session gets a fresh executor classloader and the tick recompiles
+    * every generated class it runs. The setting only takes effect when
+    * the session is created. */
   def runOnce(
       spark: SparkSession,
       bronzeDir: String,

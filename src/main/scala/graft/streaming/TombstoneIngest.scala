@@ -149,7 +149,8 @@ object TombstoneIngest {
     * gets max+1, and an insert stream running its own checkpoint
     * against the same index can never collide with it. Events need
     * (vec_id, timestamp) with WRITE-time stamps — see
-    * [[Incremental.runOnce]] for the late-data contract. */
+    * [[Incremental.runOnce]] for the late-data contract and the
+    * session setting a caller that starts one pass per tick needs. */
   def runOnce(spark: SparkSession, deletesDir: String, indexDir: String,
       checkpointDir: String): StreamingQuery = {
     val schema = spark.read.parquet(deletesDir).schema

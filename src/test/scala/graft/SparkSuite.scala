@@ -11,6 +11,11 @@ trait SparkSuite extends AnyFunSuite {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // BenchSession's streaming contract: one classloader for every
+      // cloned streaming session, so repeated runOnce ticks reuse
+      // generated code. Nothing else of BenchSession is taken, so the
+      // pinned plan shapes keep this suite's config.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.domain.{MatchTransform, Schemas}
@@ -13,6 +14,25 @@ import Schemas._
   * equivalent to the batch recompute. */
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
+
+  /** One ranked match of player MASTER-1. Every row carries the same
+    * ingest audit timestamp, which drives the dedup watermark. */
+  private def mk(matchId: String, win: Boolean): RawMatch =
+    RawMatch(matchId, "MASTER-1", processed = false,
+      Some(RawPayload(Some(MatchInfo(Some(420), Some(1800L), Some(1700000000000L),
+        Some(1700000100000L), Some(Seq(Participant(
+          Some("MASTER-1"), Some("Agurin"), Some("EUW"), None, Some("Ahri"),
+          Some(100), Some(win), Some(5), Some(2), Some(5),
+          Some(100), Some(0), Some(10000), Some(9000),
+          Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(0)))))))),
+      Some(new java.sql.Timestamp(1700000200000L)))
+
+  /** Bound on the codegen compiles of the third of three ticks: 0 were
+    * measured with artifact isolation off, 28 with it on. */
+  private val WarmTickCompiles = 4
+
+  private lazy val summoners = Seq(
+    Summoner("MASTER-1", "Agurin#EUW", "europe", "euw1", 500, 1, None, None, None)).toDF()
 
   test("streaming gold agg (update mode) == batch groupBy recompute") {
     implicit val sqlCtx = spark.sqlContext
@@ -48,20 +68,6 @@ class StreamingSpec extends SparkSuite {
     val silverDir = s"$tmp/silver"
     val goldDir = s"$tmp/gold"
     val ckpt = s"$tmp/ckpt"
-
-    def mk(matchId: String, win: Boolean): RawMatch =
-      RawMatch(matchId, "MASTER-1", processed = false,
-        Some(RawPayload(Some(MatchInfo(Some(420), Some(1800L), Some(1700000000000L),
-          Some(1700000100000L), Some(Seq(Participant(
-            Some("MASTER-1"), Some("Agurin"), Some("EUW"), None, Some("Ahri"),
-            Some(100), Some(win), Some(5), Some(2), Some(5),
-            Some(100), Some(0), Some(10000), Some(9000),
-            Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(0)))))))),
-        // ingest audit timestamp — drives the dedup watermark
-        Some(new java.sql.Timestamp(1700000200000L)))
-
-    val summoners = Seq(
-      Summoner("MASTER-1", "Agurin#EUW", "europe", "euw1", 500, 1, None, None, None)).toDF()
 
     // batch 1: two matches + a duplicate matchId (must dedup)
     Seq(mk("M1", win = true), mk("M2", win = false), mk("M1", win = true))
@@ -102,6 +108,25 @@ class StreamingSpec extends SparkSuite {
     val silverBatches = new java.io.File(silverDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).sorted
     assert(silverBatches.length >= 2 && silverBatches.head == "batch=0")
+  }
+
+  test("runOnce ticks reuse generated code: a warm tick compiles at most a few classes") {
+    val tmp = Files.createTempDirectory("graft_ticks").toString
+    val (bronzeDir, silverDir, goldDir, ckpt) =
+      (s"$tmp/bronze", s"$tmp/silver", s"$tmp/gold", s"$tmp/ckpt")
+    // lands one match and returns the codegen compiles of the poll tick
+    // that ingests it; the fixed ingest stamp keeps the watermark (a
+    // literal in the generated dedup predicate) the same from tick 2 on
+    def tick(matchId: String): Long = {
+      Seq(mk(matchId, win = true)).toDF().write.mode("append").parquet(bronzeDir)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Incremental.runOnce(spark, bronzeDir, summoners, silverDir, goldDir, ckpt)
+        .awaitTermination()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val compiles = Seq("T1", "T2", "T3").map(tick)
+    assert(Incremental.readGold(spark, goldDir).get.collect().head.getAs[Long]("games") == 3)
+    assert(compiles(2) <= WarmTickCompiles, s"codegen compiles per tick: $compiles")
   }
 
   test("gold merge is idempotent under at-least-once batch retry") {
